@@ -115,38 +115,46 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate pairs via banded LSH + signature-jaccard verify.
 
-    Band hash = xxhash64 of the band's slice; bucket join on
-    (band, band_hash); pairs deduped (id1 < id2); estimated jaccard =
-    fraction of agreeing signature positions; keep >= threshold.
-    """
-    num_hashes = len(sigs.select("sig").first()["sig"])
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for bi in range(bands):
-        sl = F.slice("sig", bi * rows_per_band + 1, rows_per_band)
-        band_cols.append(F.struct(F.lit(bi).alias("band"), F.xxhash64(sl).alias("bh")))
-    exploded = sigs.select(
-        F.col(id_col), "sig", F.explode(F.array(*band_cols)).alias("b")
-    ).select(id_col, "sig", "b.band", "b.bh")
+    Band width = size(sig) // bands, per row; band hash = xxhash64 of
+    the band's slice; bucket self-join on (band, band_hash); estimated
+    jaccard = fraction of agreeing signature positions (over size(sig));
+    keep >= threshold, one row per pair (id1 < id2).
 
-    left = exploded.select(
-        F.col(id_col).alias("id1"), F.col("sig").alias("sig1"), "band", "bh"
+    `sigs` is evaluated once: both join sides are the same frame under a
+    shuffle-hash join, so Spark reads them from one reused exchange and
+    the signature kernel upstream runs once per row. (Adaptive execution
+    does not reuse an exchange over a cached relation: when `sigs` reads
+    a cached frame, the kernel runs once per join side.)
+    """
+    width = (F.size("sig") / F.lit(bands)).cast("int")
+    band_cols = [
+        F.struct(
+            F.lit(bi).alias("band"),
+            F.xxhash64(F.slice("sig", F.lit(bi) * width + F.lit(1), width)).alias("bh"),
+        )
+        for bi in range(bands)
+    ]
+    exploded = sigs.select(
+        F.col(id_col).alias("id"), "sig", F.explode(F.array(*band_cols)).alias("b")
+    ).select("id", "sig", "b.band", "b.bh")
+
+    left, right = exploded.alias("l"), exploded.alias("r")
+    same_bucket = (
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.bh") == F.col("r.bh"))
+        & (F.col("l.id") < F.col("r.id"))
     )
-    right = exploded.select(
-        F.col(id_col).alias("id2"), F.col("sig").alias("sig2"), "band", "bh"
-    )
-    cand = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", "sig1", "sig2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    agree = F.size(F.filter(F.zip_with("sig1", "sig2", lambda x, y: x == y), lambda v: v))
-    est = agree.cast("double") / F.lit(float(num_hashes))
+    agree = F.size(F.filter(F.zip_with("l.sig", "r.sig", lambda x, y: x == y), lambda v: v))
     return (
-        cand.withColumn("est_jaccard", est)
+        left.hint("shuffle_hash")
+        .join(right, same_bucket)
+        .select(
+            F.col("l.id").alias("id1"),
+            F.col("r.id").alias("id2"),
+            (agree.cast("double") / F.size("l.sig")).alias("est_jaccard"),
+        )
         .filter(F.col("est_jaccard") >= threshold)
-        .select("id1", "id2", "est_jaccard")
+        .dropDuplicates(["id1", "id2"])
     )
 
 

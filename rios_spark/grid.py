@@ -134,8 +134,10 @@ def np_polyfill_bbox(
 
 
 def cell_col(lat: Column | str, lon: Column | str, res: int) -> Column:
-    """Spark Column computing the cell id. Pure built-in expressions:
-    stays inside WholeStageCodegen, no Python, no shuffle."""
+    """Spark Column computing the cell id; NULL when lat or lon is NULL
+    (greatest/least skip NULL, so the clamp alone would yield a corner
+    cell). Pure built-in expressions: stays inside WholeStageCodegen,
+    no Python, no shuffle."""
     lat = F.col(lat) if isinstance(lat, str) else lat
     lon = F.col(lon) if isinstance(lon, str) else lon
     n = float(1 << res)
@@ -143,7 +145,8 @@ def cell_col(lat: Column | str, lon: Column | str, res: int) -> Column:
     y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(n))
     x = F.greatest(F.lit(0).cast("long"), F.least(x, F.lit(int(n) - 1).cast("long")))
     y = F.greatest(F.lit(0).cast("long"), F.least(y, F.lit(int(n) - 1).cast("long")))
-    return (F.lit(res * RES_MUL).cast("long") + y * F.lit(Y_MUL).cast("long") + x).alias("cell")
+    cell = F.lit(res * RES_MUL).cast("long") + y * F.lit(Y_MUL).cast("long") + x
+    return F.when(lat.isNotNull() & lon.isNotNull(), cell).alias("cell")
 
 
 def parent_col(cell: Column | str, res: int, parent_res: int) -> Column:
@@ -481,12 +484,16 @@ _PYPROJ_CACHE: dict = {}
 
 def cell_sql(lat_expr: str, lon_expr: str, res: int) -> str:
     """ANSI SQL computing the cell id — identical text runs on Spark and
-    DuckDB and produces identical BIGINTs (same IEEE ops, same order)."""
+    DuckDB and produces identical BIGINTs (same IEEE ops, same order);
+    NULL when lat or lon is NULL, as in cell_col."""
     n = float(1 << res)
     nmax = (1 << res) - 1
     x = f"greatest(0, least(cast(floor((({lon_expr}) + 180.0) / 360.0 * {n!r}) as bigint), {nmax}))"
     y = f"greatest(0, least(cast(floor((90.0 - ({lat_expr})) / 180.0 * {n!r}) as bigint), {nmax}))"
-    return f"({res * RES_MUL} + {y} * {Y_MUL} + {x})"
+    return (
+        f"(CASE WHEN ({lat_expr}) IS NOT NULL AND ({lon_expr}) IS NOT NULL"
+        f" THEN {res * RES_MUL} + {y} * {Y_MUL} + {x} END)"
+    )
 
 
 def geocode_sql(key_expr: str) -> tuple[str, str]:

@@ -93,6 +93,29 @@ def test_sql_text_matches_numpy_on_duckdb_and_spark(spark, res):
     assert (sp == want).all()
 
 
+def test_null_coords_give_null_cell_on_spark_and_duckdb(spark):
+    """greatest/least skip NULL, so an unguarded clamp maps a NULL lat
+    or lon to a corner cell in both engines; both must return NULL."""
+    lat, lon = _rand_latlon(40, seed=9)
+    pdf = pd.DataFrame({"lat": lat, "lon": lon})
+    pdf.loc[[3, 7], "lat"] = None
+    pdf.loc[[7, 11], "lon"] = None
+    null = pdf["lat"].isna() | pdf["lon"].isna()
+    res = 2
+    expr = grid.cell_sql("lat", "lon", res)
+    con = duckdb.connect()
+    con.register("t", pdf)
+    # row lists, not pandas: a float64 column with NaN would round the ids
+    duck = [r[0] for r in con.execute(f"select {expr} as cell from t").fetchall()]
+    sdf = spark.createDataFrame(pdf, "lat double, lon double")
+    sdf.createOrReplaceTempView("t_grid_null")
+    sp_sql = [r[0] for r in spark.sql(f"select {expr} as cell from t_grid_null").collect()]
+    sp_col = [r[0] for r in sdf.select(grid.cell_col("lat", "lon", res)).collect()]
+    cells = iter(grid.np_cell(lat[~null], lon[~null], res).tolist())
+    want = [None if isnull else next(cells) for isnull in null]
+    assert duck == sp_sql == sp_col == want
+
+
 def test_spark_parent_and_kring_cols(spark):
     lat, lon = _rand_latlon(500, seed=5)
     pdf = pd.DataFrame({"lat": lat, "lon": lon})

@@ -121,6 +121,75 @@ def test_manifest_resume(spark, pages, tmp_path):
     assert m["n_rows"].sum() == df.count()
     assert (m["n_bytes"] > 0).all()
 
+    # per-cell metrics equal an independent groupBy of the input
+    want = (
+        df.groupBy("cell")
+        .agg(F.count("*").alias("n_rows"), F.sum(F.octet_length("url")).alias("n_bytes"))
+        .toPandas()
+        .set_index("cell")
+        .sort_index()
+    )
+    got = m.set_index("cell").sort_index()
+    assert got.index.is_unique and list(got.index) == list(want.index)
+    assert (got["n_rows"] == want["n_rows"]).all()
+    assert (got["n_bytes"] == want["n_bytes"]).all()
+
+
+def test_manifest_run_stage_evaluates_each_row_once(spark, pages, tmp_path):
+    """The staged column's Python kernel runs once per input row on a
+    fresh stage (the write; metrics are read back from the written
+    partitions), on no row of a completed cell when a stage partly
+    resumes, and on no row at all when nothing is pending."""
+    from pyspark.sql.functions import pandas_udf
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("string")
+    def counted_upper(s: pd.Series) -> pd.Series:
+        seen.add(len(s))
+        return s.str.upper()
+
+    man = Manifest(spark, str(tmp_path / "manifest"))
+    out = str(tmp_path / "out")
+    df = pages.select("cell", "page_id", counted_upper("url").alias("url"))
+    n = pages.count()
+
+    def staged(data):
+        before = seen.value
+        stats = man.run_stage("job1", "upper", data, out, payload_col="url")
+        return stats, seen.value - before
+
+    cells = sorted(r["cell"] for r in pages.select("cell").distinct().collect())
+    first = spark.createDataFrame([(int(c),) for c in cells[: len(cells) // 3]], "cell long")
+    n_first = staged(df.join(F.broadcast(first), "cell", "left_semi"))[0]["rows_written"]
+    assert 0 < n_first < n
+
+    stats, rows = staged(df)  # partial resume: only the pending cells' rows
+    assert stats["rows_written"] == rows == n - n_first
+    assert stats["cells_pending"] == len(cells) - len(cells) // 3
+
+    stats, rows = staged(df)  # nothing pending
+    assert stats == {"cells_total": len(cells), "cells_pending": 0, "rows_written": 0}
+    assert rows == 0
+
+    man2 = Manifest(spark, str(tmp_path / "manifest2"))
+    before = seen.value
+    stats = man2.run_stage("job1", "upper", df, str(tmp_path / "out2"), payload_col="url")
+    assert stats["rows_written"] == seen.value - before == n  # fresh stage
+
+
+def test_manifest_run_stage_rejects_null_cells(spark, tmp_path):
+    """A NULL cell can never be recorded as done: the stage raises
+    instead of dropping its rows and reporting the cell pending on every
+    resume."""
+    man = Manifest(spark, str(tmp_path / "manifest"))
+    df = spark.createDataFrame(
+        [(1, 10, "a"), (2, None, "b"), (3, 30, "c")], "page_id long, tile long, url string"
+    )
+    with pytest.raises(ValueError, match="'tile'"):
+        man.run_stage("job1", "tile", df, str(tmp_path / "out"), payload_col="url", cell="tile")
+    assert man.read().count() == 0
+
 
 def test_write_read_tiled_partition_pruning(spark, pages, tmp_path):
     path = str(tmp_path / "tiled")

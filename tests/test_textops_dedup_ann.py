@@ -275,6 +275,36 @@ def test_minhash_lsh_finds_planted_near_dups(spark, docs):
     assert (hits["est_jaccard"] >= 0.5).all()
 
 
+def test_minhash_lsh_evaluates_signatures_once(spark, docs, tmp_path):
+    """Both sides of the bucket self-join read one exchange: a Python
+    kernel producing the signatures sees each row once. The input is a
+    parquet copy no cached plan matches: adaptive execution does not
+    reuse an exchange over a cached relation."""
+    docs.select("doc_id", "text").write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(it):
+        for pdf in it:
+            seen.add(len(pdf))
+            yield pdf
+
+    sigs = dedup.minhash_signatures(docs, "text", "doc_id").mapInPandas(
+        counted, "doc_id long, sig array<long>"
+    )
+    before = seen.value
+    dedup.minhash_lsh_pairs(sigs, "doc_id", bands=16, threshold=0.5).collect()
+    assert seen.value - before == docs.count()
+
+
+def test_minhash_lsh_empty_input(spark):
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    sigs = dedup.minhash_signatures(empty, "text", "doc_id")
+    pairs = dedup.minhash_lsh_pairs(sigs, "doc_id")
+    assert pairs.columns == ["id1", "id2", "est_jaccard"]
+    assert pairs.count() == 0
+
+
 def test_minhash_signature_determinism(spark, docs):
     s1 = dedup.minhash_signatures(docs.limit(10), "text", "doc_id").toPandas()
     s2 = dedup.minhash_signatures(
