@@ -21,7 +21,7 @@ applier   the RIOS `applier.apply` analogue: co-partitioned multi-input
 margin    k-ring overlap-margin join (RIOS setOverlap analogue)
 stats     single-pass statistics + RIOS-exact histogram binning,
           median/mode from histogram, pyramid rollups
-spatial   point-in-polygon join, zonal aggregation (salted), kNN join
+spatial   point-in-polygon join, zonal aggregation, kNN join
 textops   deterministic html→text extraction, language id, quality
           scoring, token counts, fingerprints
 dedup     exact / minhash-LSH / simhash / n-gram-jaccard / embedding

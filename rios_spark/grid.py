@@ -36,7 +36,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAX_RES = 28
@@ -79,18 +79,20 @@ def np_parent(cell: np.ndarray, parent_res: int) -> np.ndarray:
 def np_kring(cell: int, k: int) -> np.ndarray:
     """All cells within Chebyshev distance k of `cell` (incl. itself).
 
-    x wraps across the antimeridian; rows beyond the poles are dropped.
+    x wraps across the antimeridian (a ring wider than the grid holds
+    each column once); rows beyond the poles are dropped.
     This is the analogue of RIOS's margin-expanded read window
     (rios/imagereader.py:94-96).
     """
     res, y, x = np_decode(np.asarray([cell]))
     res, y, x = int(res[0]), int(y[0]), int(x[0])
     n = 1 << res
-    dys, dxs = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1), indexing="ij")
-    ys = y + dys.ravel()
-    xs = (x + dxs.ravel()) % n
-    ok = (ys >= 0) & (ys < n)
-    return (res * RES_MUL + ys[ok] * Y_MUL + xs[ok]).astype(np.int64)
+    ys, xs = np.meshgrid(
+        np.arange(max(y - k, 0), min(y + k, n - 1) + 1),
+        (x - k + np.arange(min(2 * k + 1, n))) % n,
+        indexing="ij",
+    )
+    return (res * RES_MUL + ys.ravel() * Y_MUL + xs.ravel()).astype(np.int64)
 
 
 def np_cell_bounds(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -175,50 +177,61 @@ def cell_y_col(cell: Column | str) -> Column:
 
 
 def kring_cells_col(cell: Column | str, res: int, k: int) -> Column:
-    """Array column of the k-ring of `cell` (cell at known `res`).
-
-    Built from explode-free array expressions: the margin join explodes
-    this array to produce (owner_cell, row) duplicates — the exact
-    Spark re-expression of RIOS's margin-padded block read
-    (rios/imagereader.py:94-121).
-    x wraps (antimeridian); y rows beyond the poles are dropped.
+    """Array column of the k-ring of `cell` (cell at known `res`): the
+    np_kring set, built from (2k+1)^2 literal-offset expressions.
+    x wraps (antimeridian; a ring wider than the grid holds each column
+    once); y rows beyond the poles are dropped. The margin join and kNN
+    use explode_kring, which yields the same cells as rows.
     """
     cell = F.col(cell) if isinstance(cell, str) else cell
     n = 1 << res
     rem = cell - F.lit(res * RES_MUL).cast("long")
     y = F.shiftright(rem, 29)
     x = rem - y * F.lit(Y_MUL).cast("long")
-    offs = [(dy, dx) for dy in range(-k, k + 1) for dx in range(-k, k + 1)]
+    dxs = range(-k, -k + min(2 * k + 1, n))
+    offs = [(dy, dx) for dy in range(-k, k + 1) for dx in dxs]
     cells = []
     for dy, dx in offs:
         ny = y + F.lit(dy)
-        nx = (x + F.lit(dx + n)) % F.lit(n)  # wrap
+        nx = F.pmod(x + F.lit(dx), F.lit(n))  # wrap
         c = F.lit(res * RES_MUL).cast("long") + ny * F.lit(Y_MUL).cast("long") + nx
         cells.append(F.when((ny >= 0) & (ny < n), c))
     return F.array_compact(F.array(*cells))
 
 
-def kring_cells_var_col(cell: Column | str, res: int, radius: Column) -> Column:
-    """kring_cells_col with a PER-ROW radius column: array of all cells
-    within Chebyshev distance `radius` of `cell`. Built with
-    sequence/transform higher-order expressions (JVM-side); x wraps,
-    y rows beyond the poles drop. The caller must keep radius
-    <= ((1<<res)-1)//2 so the x wrap cannot produce duplicates."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
+def explode_kring(
+    df: DataFrame, cell: str, res: int, radius: Column | int, out: str
+) -> DataFrame:
+    """One output row per (input row, cell within Chebyshev distance
+    `radius` of `cell`), the ring cell in column `out` — the np_kring
+    set, each cell once. `radius` may be a literal or a per-row Column.
+
+    Two explode(sequence) generators over plain long bounds: rows
+    (clamped to the grid, so nothing past a pole is generated), then
+    columns (x wraps; a ring wider than the grid takes each of the n
+    columns once). No higher-order functions, so the Generate nodes
+    stay inside whole-stage codegen. A NULL cell or radius yields no
+    rows."""
     n = 1 << res
-    rem = cell - F.lit(res * RES_MUL).cast("long")
+    r = (radius if isinstance(radius, Column) else F.lit(int(radius))).cast("long")
+    rem = F.col(cell) - F.lit(res * RES_MUL).cast("long")
     y = F.shiftright(rem, 29)
-    x = rem - y * F.lit(Y_MUL).cast("long")
-    rng = F.sequence(-radius.cast("long"), radius.cast("long"))
-
-    def mk(dy, dx):
-        ny = y + dy
-        nx = (x + dx + F.lit(n).cast("long")) % F.lit(n).cast("long")
-        c = F.lit(res * RES_MUL).cast("long") + ny * F.lit(Y_MUL).cast("long") + nx
-        return F.when((ny >= 0) & (ny < n), c)
-
-    arr = F.flatten(F.transform(rng, lambda dy: F.transform(rng, lambda dx: mk(dy, dx))))
-    return F.array_compact(arr)
+    x = rem.bitwiseAND(F.lit(Y_MUL - 1).cast("long"))
+    top = F.lit(n - 1).cast("long")
+    ys = F.sequence(F.greatest(y - r, F.lit(0).cast("long")), F.least(y + r, top))
+    xs = F.sequence(x - r, x - r + F.least(2 * r, top))
+    ky, kx = "__kring_y", "__kring_x"
+    return (
+        df.withColumn(ky, F.explode(ys))
+        .withColumn(kx, F.explode(xs))
+        .withColumn(
+            out,
+            F.lit(res * RES_MUL).cast("long")
+            + F.col(ky) * F.lit(Y_MUL).cast("long")
+            + F.pmod(F.col(kx), F.lit(n).cast("long")),
+        )
+        .drop(ky, kx)
+    )
 
 
 def cell_coord_cols(cell: Column | str, res: int) -> dict[str, Column]:

@@ -6,42 +6,29 @@ rios/imagereader.py:94-121 margin-padded read, rios/imagewriter.py:45-47
 margin trim; correctness oracle rios/riostests/testoverlap.py:40-93).
 
 Spark re-expression: every row is duplicated to all owner cells within
-Chebyshev distance k of its own cell (`explode(k_ring(cell, k))`), so a
+Chebyshev distance k of its own cell (`grid.explode_kring`), so a
 `groupBy(owner_cell)` hands each kernel its tile PLUS the halo, and the
 engine trims halo-derived output before write. Because Chebyshev
 distance is symmetric, "explode my k-ring as owner candidates" is
 exactly "each owner receives its k-ring's rows".
 
-Scale notes: the duplication factor is (2k+1)^2 at most (9x for k=1) —
-identical to RIOS's read amplification with overlap. It happens
-map-side before the shuffle, so the shuffle carries the duplicated rows
+Scale notes: the duplication factor is min(2k+1, 2^res)^2 at most (9x
+for k=1) — identical to RIOS's read amplification with overlap. It
+happens map-side before the shuffle, inside the same whole-stage
+codegen stage as the scan, so the shuffle carries the duplicated rows
 once; there is exactly ONE shuffle (by owner_cell), same as the
 margin-less path. AQE skew-join/partition coalescing applies as usual.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rios_spark.grid import kring_cells_col, kring_cells_var_col
+from rios_spark.grid import explode_kring
 
 OWNER = "__owner"
 IS_MARGIN = "__is_margin"
-
-# r6: the literal-unrolled ring ((2k+1)^2 Column expressions built
-# driver-side) measured SLOWER than the sequence/transform formulation
-# at EVERY radius, not just large ones — interleaved medians on the
-# kNN pass-0 shape: ring 1 lit ~1.0-5.0 s vs var 0.75-1.0; ring 2 lit
-# 1.2-1.4 vs var 0.70-0.74; ring 4 lit 2.7-3.0 vs var 1.0-1.15; ring 6
-# lit 1.6-6.2 vs var 0.70-0.84. The unrolled form pays expression-tree
-# planning plus a huge generated method (the JIT-cliff class) on every
-# fresh plan, and its evaluation is no faster. The literal spelling
-# remains available (kring_cells_col) for value-parity tests; the
-# operator path always takes the O(1)-expression form. (Supersedes the
-# ADVICE r2 threshold of 8, which assumed the literal form won below
-# it — measured false.)
-_LITERAL_RING_MAX = 0
 
 
 def with_margin(df: DataFrame, res: int, k: int, cell: str = "cell") -> DataFrame:
@@ -56,14 +43,13 @@ def with_margin(df: DataFrame, res: int, k: int, cell: str = "cell") -> DataFram
     """
     if k == 0:
         return df.withColumn(OWNER, F.col(cell)).withColumn(IS_MARGIN, F.lit(False))
-    ring: Column = (
-        kring_cells_col(F.col(cell), res, k)
-        if k <= _LITERAL_RING_MAX
-        else kring_cells_var_col(F.col(cell), res, F.lit(k))
-    )
-    return (
-        df.withColumn(OWNER, F.explode(ring))
-        .withColumn(IS_MARGIN, F.col(OWNER) != F.col(cell))
+    # The ring is two explode(sequence) generators, not an array built
+    # with sequence/transform/flatten: higher-order functions are not
+    # codegen'd, and the interpreted Generate they fed took 1.7-2.0 s vs
+    # 0.3-0.4 s for the k=1 margin count over 600k points at res 6
+    # (4 cores, medians of 5 reps).
+    return explode_kring(df, cell, res, k, OWNER).withColumn(
+        IS_MARGIN, F.col(OWNER) != F.col(cell)
     )
 
 

@@ -117,6 +117,8 @@ def test_null_coords_give_null_cell_on_spark_and_duckdb(spark):
 
 
 def test_spark_parent_and_kring_cols(spark):
+    from pyspark.sql import functions as F
+
     lat, lon = _rand_latlon(500, seed=5)
     pdf = pd.DataFrame({"lat": lat, "lon": lon})
     sdf = spark.createDataFrame(pdf).select(grid.cell_col("lat", "lon", 10).alias("cell"))
@@ -130,6 +132,12 @@ def test_spark_parent_and_kring_cols(spark):
     for i in range(len(out)):
         want = set(grid.np_kring(int(cells[i]), 1).tolist())
         assert set(out["ring"][i]) == want
+    # a ring wider than the 4-column res-2 grid holds each cell once
+    wide = spark.createDataFrame(pdf.iloc[:20]).select(
+        grid.cell_col("lat", "lon", 2).alias("cell")
+    ).select("cell", F.array_sort(grid.kring_cells_col("cell", 2, 3)).alias("ring")).toPandas()
+    for c, ring in zip(wide["cell"], wide["ring"]):
+        assert list(ring) == sorted(set(grid.np_kring(int(c), 3).tolist()))
 
 
 def test_geocode_parity(spark):
@@ -281,34 +289,69 @@ def test_utm_ingest_to_cells_matches_direct(spark):
     assert (got == want).all()
 
 
-def test_kring_var_radius_matches_fixed(spark):
-    """kring_cells_var_col(r) == kring_cells_col(k=r) for every row —
-    the per-row-radius variant used by adaptive kNN escalation."""
-    import pandas as pd
+def test_np_kring_wide_ring_holds_each_cell_once():
+    """A ring wider than the grid (2k+1 > 2^res) wraps onto itself in x:
+    every column appears once, never twice."""
+    for res in (0, 1, 2, 3):
+        n = 1 << res
+        for k in range(0, 2 * n + 2):
+            for y in range(n):
+                c = res * grid.RES_MUL + y * grid.Y_MUL + (n - 1)
+                ring = grid.np_kring(c, k)
+                assert len(set(ring.tolist())) == len(ring)
+                rows = min(y + k, n - 1) - max(y - k, 0) + 1
+                assert len(ring) == rows * min(2 * k + 1, n)
+
+
+def test_explode_kring_matches_np_kring(spark):
+    """explode_kring yields exactly np_kring(cell, r) for every row, each
+    cell once: literal and per-row radius, res 1-5, the poles, the
+    antimeridian, radii at and beyond the x-wrap limit; a NULL cell
+    yields no rows."""
     from pyspark.sql import functions as F
 
-    from rios_spark.grid import cell_col, kring_cells_col, kring_cells_var_col
+    from rios_spark.grid import cell_col, explode_kring
 
     rng = np.random.default_rng(2)
-    pdf = pd.DataFrame(
-        {"lat": rng.uniform(-89, 89, 200), "lon": rng.uniform(-180, 180, 200),
-         "r": rng.integers(1, 4, 200)}
+    n = 60
+    lat, lon = _rand_latlon(n, seed=2)
+    pdf = pd.DataFrame({"i": np.arange(n), "lat": lat, "lon": lon,
+                        "r": rng.integers(0, 7, n)})
+    pdf.loc[n - 1, ["lat", "lon"]] = np.nan
+    cells = {res: grid.np_cell(lat[:-1], lon[:-1], res) for res in range(1, 6)}
+    for res in range(1, 6):
+        df = spark.createDataFrame(pdf).withColumn("cell", cell_col("lat", "lon", res))
+        wrap = (1 << res) // 2  # 2r+1 > 2^res from here on
+        for radius in (1, wrap, wrap + 1, F.col("r")):
+            rows = explode_kring(df, "cell", res, radius, "own").select("i", "own").toPandas()
+            got = rows.groupby("i")["own"].apply(lambda s: sorted(s.tolist())).to_dict()
+            assert n - 1 not in got  # NULL cell: no rows
+            assert len(got) == n - 1
+            for i, c in enumerate(cells[res]):
+                r = int(pdf["r"].iloc[i]) if isinstance(radius, F.Column) else radius
+                want = sorted(grid.np_kring(int(c), r).tolist())
+                assert got[i] == want, (res, radius, i)
+
+
+def test_with_margin_generate_is_codegen(spark):
+    """The margin explode stays inside whole-stage codegen: every
+    Generate in with_margin's plan carries a *(n) stage marker
+    (higher-order-function rings fall back to an interpreted Generate)."""
+    from pyspark.sql import functions as F
+
+    from rios_spark.grid import cell_col
+    from rios_spark.margin import with_margin
+
+    df = (
+        spark.range(1000)
+        .withColumn("lat", (F.col("id") % 170) - 85.0)
+        .withColumn("lon", (F.col("id") % 360) - 180.0)
+        .withColumn("cell", cell_col("lat", "lon", 6))
     )
-    df = spark.createDataFrame(pdf).withColumn("cell", cell_col("lat", "lon", 5))
-    for r in (1, 2, 3):
-        sub = df.filter(F.col("r") == r)
-        got = sub.select(
-            F.array_sort(kring_cells_var_col(F.col("cell"), 5, F.lit(r))).alias("a"),
-            F.array_sort(kring_cells_col(F.col("cell"), 5, r)).alias("b"),
-        ).toPandas()
-        for a, b in zip(got["a"], got["b"]):
-            assert list(a) == list(b)
-    # per-row radius in one pass
-    got = df.select(
-        F.array_sort(kring_cells_var_col(F.col("cell"), 5, F.col("r"))).alias("a"),
-        "r", "cell",
-    ).toPandas()
-    assert all(len(a) <= (2 * r + 1) ** 2 for a, r in zip(got["a"], got["r"]))
+    for k in (1, 3):
+        plan = with_margin(df, 6, k)._jdf.queryExecution().executedPlan().toString()
+        gens = [ln for ln in plan.splitlines() if "Generate " in ln]
+        assert gens and all("*(" in ln for ln in gens), plan
 
 
 def test_reproject_to_lonlat_dispatcher(spark):

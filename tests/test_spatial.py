@@ -405,11 +405,42 @@ def test_knn_tiled_residual_scan_no_driver_collect(spark):
             assert gd == pytest.approx(wd, rel=1e-9)
 
 
-def test_zonal_salt_uses_partition_id(spark):
-    """Skew contract: the zonal stage-1 salt must split a HOT CELL, so
-    it cannot be a function of the cell value (round-1 bug: xxhash64 of
-    the cell gave every row of a hot tile the same salt). The physical
-    plan must salt on SPARK_PARTITION_ID, and results stay exact."""
+def test_knn_tiled_wide_auto_ring_no_duplicate_neighbors(spark):
+    """Sparse data on a coarse grid makes the auto ring wider than the
+    grid (ring 6 at res 3: 13 columns on an 8-column grid). The ring
+    must still hold each cell once — a wrapped ring that repeats cells
+    repeats data rows, and the top-k then returns one neighbour twice."""
+    res = 3
+    rng = np.random.default_rng(7)
+    ddf = pd.DataFrame(
+        {"id": np.arange(10), "lat": rng.uniform(-80, 80, 10), "lon": rng.uniform(-180, 180, 10)}
+    )
+    qdf = pd.DataFrame(
+        {"qid": np.arange(20), "lat": rng.uniform(-80, 80, 20), "lon": rng.uniform(-180, 180, 20)}
+    )
+    queries = spark.createDataFrame(qdf).withColumn("cell", cell_col("lat", "lon", res))
+    data = spark.createDataFrame(ddf).withColumn("cell", cell_col("lat", "lon", res))
+    counters = {}
+    got = (
+        spatial.knn_tiled(queries, data, 5, res, d_id="id", q_id="qid", counters=counters)
+        .toPandas()
+        .sort_values(["qid", "rank"])
+    )
+    assert counters["ring0"] > (1 << res) // 2  # the ring wraps onto itself
+    want = _brute_oracle(qdf, ddf, 5)
+    assert len(got) == 20 * 5
+    for qid, grp in got.groupby("qid"):
+        pairs = list(zip(grp["neighbor_id"], grp["dist_km"]))
+        assert [i for i, _ in pairs] == [i for i, _ in want[int(qid)]], qid
+        for (_, gd), (_, wd) in zip(pairs, want[int(qid)]):
+            assert gd == pytest.approx(wd, rel=1e-9)
+
+
+def test_zonal_hot_cell_single_exchange(spark):
+    """Skew contract: every point in one hot cell, spread over 8 input
+    partitions, stays exact through ONE exchange — the map-side partial
+    aggregate below it hands the hot polygon's reducer at most one row
+    per input partition, so no salt stage is planned."""
     rng = np.random.default_rng(41)
     n = 4000
     # every point in one hot cell (one dense web host tile)
@@ -431,7 +462,11 @@ def test_zonal_salt_uses_partition_id(spark):
     )
     out = spatial.zonal_stats(pts, polys, 5, "v")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SPARK_PARTITION_ID" in plan
+    assert "SPARK_PARTITION_ID" not in plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert len(exchanges) == 1, plan
+    below = plan.split("Exchange hashpartitioning", 1)[1]
+    assert "HashAggregate" in below and "partial_" in below, plan
     row = out.toPandas().iloc[0]
     assert row["count"] == n
     assert row["sum"] == pytest.approx(pdf["v"].sum())

@@ -20,8 +20,8 @@ from rios_spark.session import get_spark  # noqa: E402
 
 AUDIT = [
     ("tile_counts_docs", "tile assign + count: map-side partial agg, one shuffle"),
-    ("margin_ring_counts", "k-ring explode BEFORE the shuffle (projection pruned to `cell`)"),
-    ("zonal_rect_docs", "broadcast cover + geometry join, codegen'd rect checks, salted two-stage agg"),
+    ("margin_ring_counts", "k-ring explode (two codegen'd Generates) BEFORE the shuffle (projection pruned to `cell`)"),
+    ("zonal_rect_docs", "broadcast cover + geometry join, codegen'd rect checks, one partial/final agg"),
     ("zonal_pentagon_docs", "pure half-plane SQL expression, zero Python"),
     ("knn_tiled_cust_supp", "multi-phase union (pass-0 + escalation + residual); the expensive ranked top-k is PERSISTED and re-read via InMemoryTableScan, so the phase branches share one computation of the candidate join"),
     ("resample_bilinear_cust", "broadcast kNN kernel + broadcast value join + one groupBy for the weighted quotient"),
